@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 from pyspark.sql.window import Window
 
 
@@ -85,8 +86,15 @@ def sessionize(
     )
     w = Window.partitionBy(key_col).orderBy(*order_cols)
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
-    new_session = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
+    # timestamps compare exactly, in microseconds: a whole-second cast
+    # would let a 1800.3 s gap stay inside the session
+    if isinstance(events.schema[ts_col].dataType, TimestampType):
+        t = F.unix_micros(F.col(ts_col))
+        limit = gap_seconds * 1_000_000
+    else:
+        t, limit = F.col(ts_col).cast("long"), gap_seconds
+    gap = t - F.lag(t).over(w)
+    new_session = F.when(gap.isNull() | (gap > limit), 1).otherwise(0)
     sessions = events.select(
         F.col(key_col), F.col(ts_col), F.sum(new_session).over(run).alias("session_seq")
     )

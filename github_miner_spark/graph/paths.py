@@ -551,7 +551,7 @@ def bfs_depths(
             until_set -= {r["node"] for r in hit.collect()}
         depth = 1
         done = frontier.isEmpty() or (until_set is not None and not until_set)
-        while not done and depth <= max_iter:
+        while not done and depth < max_iter:
             base_visited = reduce(lambda a, b: a.unionByName(b), chunks).select("root", "node")
             # small-probe mode: broadcast the visited set into the
             # per-level anti-join too — the whole window then runs
@@ -560,7 +560,7 @@ def bfs_depths(
             anti = F.broadcast(base_visited) if broadcast_frontier else base_visited
             window: list[DataFrame] = []
             for _ in range(checkpoint_every):
-                if depth > max_iter:
+                if depth >= max_iter:
                     break
                 depth += 1
                 f = F.broadcast(frontier) if broadcast_frontier else frontier

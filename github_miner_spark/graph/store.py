@@ -9,21 +9,20 @@ the derivation (unions + joins over the base tables) is ETL, paid once;
 queries then scan a compact columnar edge table with min/max statistics
 on the BIGINT keys instead of re-running the derivation per query.
 
-The store is content-addressed by source directory and written
-atomically (tmp dir + rename), so concurrent readers either see a
-complete store or build their own; rebuilds are idempotent.
+The store is content-addressed by source directory and published
+through io/store.py (build into a staging dir, one rename into place),
+so concurrent readers either see a complete store or build their own;
+rebuilds are idempotent.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import SparkSession
 
 from github_miner_spark.graph.model import PropertyGraph, build_edges, build_vertices
-from github_miner_spark.io.store_key import GRAPH_BASE_TABLES, content_key
+from github_miner_spark.io.store import GRAPH_BASE_TABLES, content_key, publish
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_GRAPH_STORE", "/tmp/spark-graft-graph")
 
@@ -31,40 +30,27 @@ STORE_ROOT = os.environ.get("SPARK_GRAFT_GRAPH_STORE", "/tmp/spark-graft-graph")
 def _store_dir(sf_dir: str) -> str:
     """Key = source path + (name, size, mtime) of the base-table files,
     so a regenerated source dir at the same path never serves a stale
-    store (shared helper: io/store_key.py)."""
+    store (shared helper: io/store.py)."""
     key = content_key(sf_dir, [(n, n) for n in GRAPH_BASE_TABLES])
     return os.path.join(STORE_ROOT, key)
 
 
 def materialize_graph(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Ensure the graph tables for ``sf_dir`` exist on disk; return the
-    store path. Atomic: builds into a temp dir, renames into place."""
-    target = _store_dir(sf_dir)
-    if os.path.isdir(os.path.join(target, "edges.parquet")) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    store path. ``force`` rebuilds and swaps the new copy in."""
+
+    def build(stage: str) -> None:
         build_vertices(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(tmp, "vertices.parquet")
+            os.path.join(stage, "vertices.parquet")
         )
         # sort within partitions by dst: degree/dependants scans cluster
         # the hot aggregation key, and parquet min/max stats prune
         # selective dst lookups
         build_edges(spark, sf_dir).sortWithinPartitions("dst").write.mode(
             "overwrite"
-        ).parquet(os.path.join(tmp, "edges.parquet"))
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            # another builder won the race; use theirs
-            shutil.rmtree(tmp, ignore_errors=True)
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        ).parquet(os.path.join(stage, "edges.parquet"))
+
+    return publish(_store_dir(sf_dir), build, replace=force)
 
 
 def load_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
@@ -81,26 +67,20 @@ def save_graph(graph: PropertyGraph, path: str) -> str:
     ``path`` — the scale-path counterpart of Cypher writes: a delete
     script (graph/mutations.py) produces new immutable frames, and
     committing them IS a store rewrite, exactly like the reference's
-    neo4j-admin dump of a modified database. Atomic tmp-dir + rename;
-    edges keep the dst sort so the rewritten store prunes like the
-    original."""
-    parent = os.path.dirname(os.path.abspath(path)) or "."
-    os.makedirs(parent, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=parent)
-    try:
+    neo4j-admin dump of a modified database. Published with
+    ``replace`` (io/store.py), so an existing store at ``path`` is
+    swapped out; edges keep the dst sort so the rewritten store prunes
+    like the original."""
+
+    def build(stage: str) -> None:
         graph.vertices.write.mode("overwrite").parquet(
-            os.path.join(tmp, "vertices.parquet")
+            os.path.join(stage, "vertices.parquet")
         )
         graph.edges.sortWithinPartitions("dst").write.mode("overwrite").parquet(
-            os.path.join(tmp, "edges.parquet")
+            os.path.join(stage, "edges.parquet")
         )
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-        return path
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+
+    return publish(path, build, replace=True)
 
 
 def load_graph_from(spark: SparkSession, path: str) -> PropertyGraph:

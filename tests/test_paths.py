@@ -241,6 +241,21 @@ def test_distributed_closure_adversarial_depth_and_hubs(spark):
         map(tuple, d_task.collect())
     )
 
+    # a small max_iter caps all three paths at the same depth: the
+    # loop must stop at max_iter, whatever its window size
+    short = edges_df(spark, [(i, i + 1) for i in range(10)] + [(3, 0)])
+    want = [(0, 1, 1), (0, 2, 2)]
+    assert sorted(map(tuple, bfs_depths(short, roots=[0], max_iter=2).collect())) == want
+    for window in (1, 4):
+        loop = bfs_depths(
+            short, roots=[0], max_iter=2, driver_threshold=0, checkpoint_every=window
+        )
+        assert sorted(map(tuple, loop.collect())) == want
+    task = bfs_depths(
+        short, roots=[0], max_iter=2, driver_threshold=0, per_root_task_threshold=5_000_000
+    )
+    assert sorted(map(tuple, task.collect())) == want
+
 
 def test_bfs_depths_dataframe_roots_task_parity(spark):
     """The depth-profile family (bfs_depth_profile /

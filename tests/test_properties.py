@@ -308,6 +308,31 @@ def test_sessionize_matches_python_reference(spark, events):
     assert got == want
 
 
+def test_sessionize_timestamp_gap_is_exact(spark):
+    """Timestamp columns compare to the microsecond: a gap of
+    1800.000001 s opens a session, a gap of exactly 1800 s does not
+    (the DuckDB oracle's semantics; a whole-second cast merged both)."""
+    from datetime import datetime, timedelta
+
+    from github_miner_spark.functions.temporal import sessionize
+
+    t0 = datetime(2024, 1, 1, 12, 0, 0)
+    rows = [
+        (1, t0, 0),
+        (1, t0 + timedelta(seconds=1800, microseconds=1), 1),
+        (2, t0, 2),
+        (2, t0 + timedelta(seconds=1800), 3),
+        (3, t0 + timedelta(microseconds=300_000), 4),
+        (3, t0 + timedelta(seconds=1800, microseconds=600_000), 5),
+    ]
+    df = spark.createDataFrame(rows, "user_id bigint, ts timestamp, event_id bigint")
+    got = sorted(
+        (r["user_id"], r["session_seq"], r["n_events"])
+        for r in sessionize(df, gap_seconds=1800).collect()
+    )
+    assert got == [(1, 1, 1), (1, 2, 1), (2, 1, 2), (3, 1, 1), (3, 2, 1)]
+
+
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 10), st.integers(0, 10)),
